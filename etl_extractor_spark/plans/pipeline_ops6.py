@@ -239,7 +239,9 @@ def tfidf_postings_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe: MOR read tax ~1.6 s/read vs one compaction rewrite at
     ~bootstrap cost; reads after compaction return to the pre-delete
     baseline (BASELINE.md round-9 row)."""
+    import os
     import shutil
+    import uuid
 
     from etl_extractor_spark.operators.common import pid_scratch_dir
     from etl_extractor_spark.plans.pipeline_ops3 import (
@@ -251,8 +253,13 @@ def tfidf_postings_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_extractor_spark.sinks.compact import compact_with_manifest
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    path = pid_scratch_dir("spark_graft_tfidf_cpt_")
-    shutil.rmtree(path, ignore_errors=True)  # deterministic rebuild per run
+    # a fresh subdir per invocation under the (exit-removed) pid dir;
+    # the previous invocation's subdir goes, so a DataFrame still
+    # holding it fails with file-not-found rather than silently
+    # reading this invocation's snapshot at the same path
+    base = pid_scratch_dir("spark_graft_tfidf_cpt_")
+    shutil.rmtree(base, ignore_errors=True)
+    path = os.path.join(base, uuid.uuid4().hex)
     MF.write_with_manifest(
         spark, _doc_trigram_tf(d), path, stats_cols=["doc_id"],
         mode="overwrite",

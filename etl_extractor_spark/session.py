@@ -73,6 +73,17 @@ def ship_package(spark: SparkSession) -> None:
         _SHIPPED_APPS.add(app)
 
 
+def default_driver_mem() -> str:
+    """24g, or half of physical memory if that is less. A heap sized
+    past RAM grows until the kernel OOM-kills the JVM, and every later
+    call on the session then fails to connect."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "24g"
+    return f"{min(24 * 1024, total // (2 * 1024 * 1024))}m"
+
+
 def get_spark(
     app_name: str = "etl-extractor-spark",
     master: str | None = None,
@@ -98,7 +109,7 @@ def get_spark(
         # inside whole-stage codegen; default cutoff is 100 fields
         .config("spark.sql.codegen.maxFields", "256")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem())
         # reclaim reliable-checkpoint files as their RDDs are GC'd —
         # without it checkpoint dirs grow for the process lifetime
         # (operators/checkpoints.py carries the vanilla-session story)

@@ -13,7 +13,8 @@ reference's rerun-duplication bug (SURVEY §4.2.5) by design.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def write_overwrite(df: DataFrame, path: str, fmt: str = "parquet") -> None:
@@ -40,6 +41,18 @@ def write_partitioned(
     df.write.mode(mode).format(fmt).partitionBy(*partition_by).save(path)
 
 
+def observed(df: DataFrame, metrics: dict | None = None) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count ``rows`` (plus the caller's aggregate
+    ``metrics``) attached as an Observation: whichever action consumes
+    the returned frame — typically its write — collects them on the same
+    pass. Read ``Observation.get`` once that action has returned."""
+    obs = Observation()
+    exprs = [F.count(F.lit(1)).alias("rows")]
+    for name, col in (metrics or {}).items():
+        exprs.append(col.alias(name))
+    return df.observe(obs, *exprs), obs
+
+
 def write_observed(
     df: DataFrame,
     path: str,
@@ -57,12 +70,6 @@ def write_observed(
     metric rides the same task set for free. Returns the metrics dict
     (always includes ``rows``).
     """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    exprs = [F.count(F.lit(1)).alias("rows")]
-    for name, col in (metrics or {}).items():
-        exprs.append(col.alias(name))
-    df.observe(obs, *exprs).write.mode(mode).format(fmt).save(path)
+    out, obs = observed(df, metrics)
+    out.write.mode(mode).format(fmt).save(path)
     return obs.get

@@ -321,3 +321,19 @@ def test_ops6_names_enter_r10_after_real_r2():
     first_p6 = min(r10.index(n) for n in in_r10)
     real_r2_left = [n for n in r10 if sim.get(n) == 2]
     assert all(r10.index(n) < first_p6 for n in real_r2_left)
+
+
+def test_tfidf_compaction_stale_handle_fails_loudly(spark):
+    """Each tfidf_postings_compaction call rebuilds into its own scratch
+    subdir and removes the previous one: a DataFrame still holding the
+    previous build must fail on read, never return the new build's
+    rows as its own."""
+    import pytest
+
+    from etl_extractor_spark.plans.pipeline_ops6 import tfidf_postings_compaction
+
+    stale = tfidf_postings_compaction(spark, SF)
+    fresh = tfidf_postings_compaction(spark, SF)
+    assert fresh.count() > 0
+    with pytest.raises(Exception, match="(?i)not.?found|does not exist"):
+        stale.collect()
