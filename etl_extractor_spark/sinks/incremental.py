@@ -119,7 +119,9 @@ def apply_batch(
     os.rename(tmp, dst)
     with open(os.path.join(state_path, _META), "w") as fh:
         json.dump({"batch_id": batch_id}, fh)
-    return spark.read.parquet(dst)
+    # the schema just written, so the read-back runs no inference job
+    # (a non-partitioned write keeps the columns in this order)
+    return spark.read.schema(merged.schema).parquet(dst)
 
 
 def with_derived(df: DataFrame, derived: dict[str, Any]) -> DataFrame:

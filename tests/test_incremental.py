@@ -76,3 +76,19 @@ def test_non_mergeable_aggregate_rejected(spark, orders, tmp_path):
             {"bad": ("avg", "o_totalprice")},
             batch_id=0,
         )
+
+
+def test_returned_state_equals_bare_read_of_swapped_in_data(spark, orders, tmp_path):
+    """apply_batch reads the swapped-in state back with the schema it
+    wrote; that must be the schema and rows a schema-inferring read of
+    the same files gives, both for the first batch and after a merge."""
+    state = str(tmp_path / "agg_state")
+    batches = [
+        orders.filter(F.year("o_orderdate") <= 1996),
+        orders.filter(F.year("o_orderdate") > 1996),
+    ]
+    for i, b in enumerate(batches):
+        got = apply_batch(spark, state, b, ["o_custkey"], MEASURES, batch_id=i)
+        bare = spark.read.parquet(str(tmp_path / "agg_state" / "data"))
+        assert got.schema == bare.schema
+        assert _snapshot(got) == _snapshot(bare)

@@ -4,6 +4,9 @@ broadcast joins. Guards against future plan-shape regressions."""
 
 from __future__ import annotations
 
+import ast
+import os
+
 import pytest
 
 from etl_extractor_spark.plans.tpch import (
@@ -875,3 +878,43 @@ def test_t_closeness_covers_full_grid(spark, sf_dir):
     )
     buggy_tvd = math.floor(buggy_num / (2.0 * nat_tot[target] * n) * 1000000)
     assert rows[target]["tvd_micro"] > buggy_tvd
+
+
+def _star_mix() -> tuple[str, ...]:
+    """The benchmark's analyst mix (``STAR_MIX`` in perfbench/workloads.py),
+    read from the source so the benchmark's modules stay out of this
+    process."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "perfbench", "workloads.py")) as fh:
+        tree = ast.parse(fh.read())
+    for node in tree.body:
+        targets = node.targets if isinstance(node, ast.Assign) else []
+        if any(getattr(t, "id", None) == "STAR_MIX" for t in targets):
+            return ast.literal_eval(node.value)
+    raise AssertionError("STAR_MIX not found")
+
+
+def test_warm_build_of_star_mix_runs_no_job(spark, sf_dir):
+    """Building a query plan must not touch the data once its tables'
+    schemas are known. One build of the nine-query mix ran 34 jobs, one
+    schema inference per table read, before load_table remembered
+    schemas (sf0.001 test data); a warm build now runs none."""
+    from etl_extractor_spark.plans.registry import all_queries
+
+    queries = all_queries()
+    mix = _star_mix()
+    assert len(mix) == 9
+    sc = spark.sparkContext
+    group = f"star-mix-build-{os.getpid()}"
+    sc.setJobGroup(group, "star mix build guard")
+    try:
+        for name in mix:
+            queries[name](spark, sf_dir)
+        cold = len(sc.statusTracker().getJobIdsForGroup(group))
+        for name in mix:
+            queries[name](spark, sf_dir)
+        warm = len(sc.statusTracker().getJobIdsForGroup(group)) - cold
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert warm == 0, (cold, warm)
